@@ -58,17 +58,21 @@ object ContentCuts {
     var i = 0
     while (i < bytes.length) {
       val b0 = bytes(i) & 0xff
-      var cp = 0
-      if (b0 < 0x80) { cp = b0; i += 1 }
-      else if (b0 < 0xe0) {
-        cp = ((b0 & 0x1f) << 6) | (bytes(i + 1) & 0x3f); i += 2
-      } else if (b0 < 0xf0) {
-        cp = ((b0 & 0x0f) << 12) | ((bytes(i + 1) & 0x3f) << 6) |
-          (bytes(i + 2) & 0x3f); i += 3
-      } else {
-        cp = ((b0 & 0x07) << 18) | ((bytes(i + 1) & 0x3f) << 12) |
-          ((bytes(i + 2) & 0x3f) << 6) | (bytes(i + 3) & 0x3f); i += 4
-      }
+      // Sequence width per lead byte as UTF8String.numChars steps, so the
+      // final cut equals SQL length(t) on any bytes a CAST(binary AS
+      // STRING) yields. An invalid lead byte, or a sequence cut short by
+      // the end of the string, is one U+FFFD code point.
+      val w = if (b0 < 0xc2) 1 else if (b0 < 0xe0) 2 else if (b0 < 0xf0) 3
+        else if (b0 < 0xf5) 4 else 1
+      val cp =
+        if (b0 < 0x80) b0
+        else if (w == 1 || i + w > bytes.length) 0xfffd
+        else if (w == 2) ((b0 & 0x1f) << 6) | (bytes(i + 1) & 0x3f)
+        else if (w == 3) ((b0 & 0x0f) << 12) | ((bytes(i + 1) & 0x3f) << 6) |
+          (bytes(i + 2) & 0x3f)
+        else ((b0 & 0x07) << 18) | ((bytes(i + 1) & 0x3f) << 12) |
+          ((bytes(i + 2) & 0x3f) << 6) | (bytes(i + 3) & 0x3f)
+      i += w
       pos += 1
       if (pos >= 4 && (a * 29791 + b * 961 + c * 31 + cp) % modulus == 0)
         out.add(pos)

@@ -9,9 +9,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * materializes the round's output — and then asked a SECOND job for the
   * convergence probe (Σ label, survivor count). Under AQE each job is a
   * full driver barrier plus listener round-trips, and on an iterative
-  * operator those per-round barriers ARE the cost (guide §1.1: the
-  * SPARK_GRAFT_JOBS profile shows ~20 ms of pure choreography per job on
-  * kilobyte fixture data; at 100 TB the probe job is additionally a full
+  * operator those per-round barriers ARE the cost (guide §1.1: the jobs
+  * count in each entry's bench_last.json record shows ~20 ms of pure
+  * choreography per job on kilobyte fixture data; at 100 TB the probe job is additionally a full
   * scan of the round's output).
   *
   * `Dataset.observe` removes the second job: the probe aggregate rides

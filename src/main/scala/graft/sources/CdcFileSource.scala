@@ -93,19 +93,9 @@ final class CdcFileScan(path: String, numPartitions: Int,
       if (lsns.isEmpty || numPartitions <= 1)
         Array(CdcRangePartition(path, Long.MinValue, Long.MaxValue, walFormat,
           malformed = malformed))
-      else {
-        val lo = lsns.min - 1 // exclusive start
-        val hi = lsns.max
-        val n = math.max(1L, math.min(numPartitions.toLong, hi - lo)).toInt
-        val width = math.max(1L, (hi - lo + n - 1) / n)
-        val parts = (0 until n).iterator
-          .map(i => CdcRangePartition(path, lo + i * width,
-            math.min(hi, lo + (i + 1) * width), walFormat,
-            malformed = malformed))
-          .filter(p => p.endInclusive > p.startExclusive)
-          .toArray
-        CdcFileMicroBatchStream.attachPgStates(path, walFormat, parts)
-      }
+      else // exclusive start one below the lowest LSN
+        CdcFileMicroBatchStream.planRanges(path, lsns.min - 1, lsns.max,
+          numPartitions, walFormat, malformed)
     }
     override def createReaderFactory(): PartitionReaderFactory =
       new CdcReaderFactory
@@ -161,18 +151,9 @@ final class CdcFileMicroBatchStream(path: String, numPartitions: Int = 1,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[CdcOffset].lsn
     val e = end.asInstanceOf[CdcOffset].lsn
-    if (e <= s) return Array.empty
-    // Contiguous LSN subranges → parallel replay readers (the real
-    // source's analog: one reader per slot range / table shard).
-    val n = math.max(1, math.min(numPartitions, (e - s).toInt))
-    val width = math.max(1L, (e - s + n - 1) / n)
-    val parts = (0 until n).iterator
-      .map(i => CdcRangePartition(path, s + i * width,
-        math.min(e, s + (i + 1) * width), walFormat,
-        malformed = malformed))
-      .filter(p => p.endInclusive > p.startExclusive)
-      .toArray
-    CdcFileMicroBatchStream.attachPgStates(path, walFormat, parts)
+    if (e <= s) Array.empty
+    else CdcFileMicroBatchStream.planRanges(path, s, e, numPartitions,
+      walFormat, malformed)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new CdcReaderFactory
@@ -184,6 +165,24 @@ final class CdcFileMicroBatchStream(path: String, numPartitions: Int = 1,
 
 object CdcFileMicroBatchStream {
   private val mapper = new ObjectMapper()
+
+  /** Splits the LSN span (start, end] into at most `numPartitions`
+    * contiguous subranges, one replay reader each (the real source's
+    * analog: one reader per slot range / table shard). Computed in Long:
+    * on `pgwal://` LSNs are WAL byte positions, so one trigger's span
+    * can exceed 2 GiB. */
+  def planRanges(path: String, start: Long, end: Long, numPartitions: Int,
+      walFormat: String, malformed: String): Array[InputPartition] = {
+    val n = math.max(1L, math.min(numPartitions.toLong, end - start)).toInt
+    val width = math.max(1L, (end - start + n - 1) / n)
+    val parts = (0 until n).iterator
+      .map(i => CdcRangePartition(path, start + i * width,
+        math.min(end, start + (i + 1) * width), walFormat,
+        malformed = malformed))
+      .filter(p => p.endInclusive > p.startExclusive)
+      .toArray
+    attachPgStates(path, walFormat, parts)
+  }
 
   /** For pgoutput multi-range plans: ONE driver-side metadata pass over
     * the log computes the decoder state at each range boundary
@@ -230,46 +229,6 @@ object CdcFileMicroBatchStream {
     if (digits == 0) mapper.readTree(l).get("lsn").asLong()
     else if (neg) -v else v
   }
-
-  /** (lsn, line) pairs for the whole log. A line whose LSN cannot be
-    * parsed at all (structural corruption) is indexed at its
-    * predecessor's LSN so it rides the same range and the same
-    * micro-batch as its file neighborhood — offset accounting stays
-    * monotone and the stream never wedges on it. Whether the line then
-    * errors or quarantines is the READER's `malformed` policy; the
-    * index itself is always lenient (a planning-time throw would kill
-    * the query before the policy could apply). */
-  def readLines(path: String): Seq[(Long, String)] = {
-    val f = new java.io.File(path)
-    if (!f.exists()) return Seq.empty
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try {
-      var prev = Long.MinValue + 1
-      src.getLines().filter(_.nonEmpty).map { l =>
-        val lsn = try lsnOf(l) catch { case scala.util.control.NonFatal(_) => prev }
-        prev = lsn
-        lsn -> l
-      }.toVector
-    } finally src.close()
-  }
-
-  /** LSNs present in the log, for either format (no payload decode). */
-  def readLsns(path: String, walFormat: String): Seq[Long] =
-    if (walFormat == "pgoutput") readRawLines(path).map(_._1)
-    else readLines(path).map(_._1)
-
-  /** Binary-WAL lines as (lsn, raw line) — LSN from the cheap numeric
-    * prefix, base64 payload NOT decoded (callers decode lazily after
-    * range pruning; see [[FileWalTransport.frames]]). */
-  def readRawLines(path: String): Seq[(Long, String)] = {
-    val f = new java.io.File(path)
-    if (!f.exists()) return Seq.empty
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try src.getLines().filter(_.nonEmpty)
-      .map(l => l.substring(0, l.indexOf(' ')).toLong -> l).toVector
-    finally src.close()
-  }
-
 
   def envelopeToRow(e: graft.cdc.CdcEnvelope): InternalRow = {
     def mapOf(m: Map[String, String]) = {

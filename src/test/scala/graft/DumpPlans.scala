@@ -25,9 +25,8 @@ import scala.collection.mutable
   *    this is the only window onto their per-batch physical plans.
   *
   * Listeners are session-global and events arrive asynchronously, so
-  * each entry is followed by a short drain pause before attribution;
-  * plans are documentation, and a rare misattributed straggler is
-  * visible (the header names every captured source).
+  * each entry is followed by a listener-bus drain before attribution:
+  * every event the entry's actions posted has been delivered by then.
   */
 object DumpPlans {
   private val MaxInternal = 3     // distinct internal plans kept per entry
@@ -79,7 +78,7 @@ object DumpPlans {
       })
 
     def drainAndReset(): (Seq[String], Seq[String]) = {
-      Thread.sleep(400) // async listener buses drain
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       val i = internal.synchronized {
         val v = internal.toVector; internal.clear(); v }
       val s = streaming.synchronized {

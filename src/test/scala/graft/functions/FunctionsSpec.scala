@@ -35,11 +35,22 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cdc_cuts matches the SQL rolling-hash fold") {
+    // malformed UTF-8: two sequences cut short by the end of the string
+    // (CAST(X'61626364E2' AS STRING), CAST(X'F09F98' AS STRING)) and
+    // invalid lead bytes (a lone continuation byte, C0, F5, FF)
     val texts = Seq("abcdef", "zzabcdef", "abcd",
       "the quick brown fox jumps over the lazy dog " * 8)
-    val df = registered.createDataset(texts).toDF("t")
-    for (mod <- Seq(1, 4, 16)) {
-      val got = df.selectExpr(s"cdc_cuts(t, $mod)",
+      .map(_.getBytes("UTF-8")) ++ Seq("61626364E2", "F09F98", "8041C0F5FF41")
+      .map(_.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+    // the shuffle keeps the projection out of optimizer-time local
+    // evaluation, so each mode runs the kernel the way a scan would
+    val df = registered.createDataset(texts).toDF("b").repartition(1)
+      .selectExpr("cast(b as string) t")
+    for (interpreted <- Seq(false, true); mod <- Seq(1, 4, 16)) {
+      spark.conf.set("spark.sql.codegen.wholeStage", (!interpreted).toString)
+      spark.conf.set("spark.sql.codegen.factoryMode",
+        if (interpreted) "NO_CODEGEN" else "FALLBACK")
+      val got = try df.selectExpr(s"cdc_cuts(t, $mod)",
         s"""array_distinct(concat(
            |  aggregate(
            |    transform(split(t, ''), ch -> ascii(ch)),
@@ -52,9 +63,19 @@ class FunctionsSpec extends SparkSpec {
            |                  % $mod = 0,
            |              concat(st.acc, array(st.pos + 1)), st.acc)),
            |    st -> st.acc),
-           |  array(cast(length(t) as int))))""".stripMargin).collect()
-      got.foreach(r => assert(r.getSeq[Int](0) == r.getSeq[Int](1),
-        s"mod=$mod: ${r.getSeq[Int](0)} vs ${r.getSeq[Int](1)}"))
+           |  array(cast(length(t) as int))))""".stripMargin,
+        "length(t)").collect()
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+      assert(got.length == texts.length)
+      got.foreach { r =>
+        val cuts = r.getSeq[Int](0)
+        assert(cuts == r.getSeq[Int](1),
+          s"mod=$mod interpreted=$interpreted: $cuts vs ${r.getSeq[Int](1)}")
+        assert(cuts.last == r.getInt(2))
+      }
     }
   }
 

@@ -1,8 +1,7 @@
 package graft.queries
 
-import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.{SparkSpec, SparkEntry}
+import graft.obs.EntryMetrics
 
 /** Streaming-state regression guard (VERDICT r9/r10 item: the streaming
   * analog of ShuffleBudgetSpec). A stateful streaming operator whose
@@ -12,9 +11,10 @@ import graft.{SparkSpec, SparkEntry}
   * 100×. The observable is the engine's own progress reports: each
   * QueryProgressEvent carries `stateOperators.numRowsTotal`, the exact
   * row count the state store holds after that micro-batch. Per query:
-  * run the entry (its streams run real micro-batches inside), take the
-  * LAST progress per stream, sum state rows across its operators, and
-  * assert the total under a per-query ceiling.
+  * run the entry (its streams run real micro-batches inside) under
+  * [[graft.obs.EntryMetrics.measure]], which keeps the LAST progress's
+  * state rows per stream the entry started, and assert their total
+  * under a per-query ceiling.
   *
   * Ceilings are ~3× the rows measured at spec config (local[4], 4
   * shuffle partitions, sf0.01) — far above micro-batch choreography
@@ -39,31 +39,18 @@ class StateBudgetSpec extends SparkSpec {
 
   test("streaming entries keep bounded state (progress-report rows)") {
     budgets.foreach { case (name, ceiling) =>
-      // last progress per stream id — entries may run several streams
-      // (fixture replays, recovery re-runs); the END state is the
-      // boundedness claim
-      val last = TrieMap.empty[java.util.UUID, Long]
-      val listener = new StreamingQueryListener {
-        import StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit =
-          last.put(e.progress.id,
-            e.progress.stateOperators.map(_.numRowsTotal).sum)
-      }
-      spark.streams.addListener(listener)
-      try {
-        SparkEntry.queries(name)(spark, sf).count()
-        Thread.sleep(500) // async listener bus drains
-        val total = last.values.sum
-        assert(last.nonEmpty && total > 0,
-          s"$name: no stateful streaming progress observed — the entry " +
-            "stopped running real micro-batches?")
-        assert(total <= ceiling,
-          s"$name holds $total state rows at end of run, ceiling " +
-            s"$ceiling — an eviction/watermark path regressed")
-        info(s"$name: $total state rows (ceiling $ceiling)")
-      } finally spark.streams.removeListener(listener)
+      // entries may run several streams (fixture replays, recovery
+      // re-runs); the END state of each is the boundedness claim
+      val last = EntryMetrics.measure(spark)(
+        SparkEntry.queries(name)(spark, sf).count())._2.stateRows
+      val total = last.values.sum
+      assert(last.nonEmpty && total > 0,
+        s"$name: no stateful streaming progress observed — the entry " +
+          "stopped running real micro-batches?")
+      assert(total <= ceiling,
+        s"$name holds $total state rows at end of run, ceiling " +
+          s"$ceiling — an eviction/watermark path regressed")
+      info(s"$name: $total state rows (ceiling $ceiling)")
     }
   }
 

@@ -120,6 +120,21 @@ class CdcFileSourceSpec extends SparkSpec {
     })
   }
 
+  test("range planner covers an LSN span wider than 2 GiB exactly") {
+    // pgwal:// LSNs are WAL byte positions: one trigger can span > Int.MaxValue
+    val stream = new CdcFileMicroBatchStream(
+      Paths.get(tmpDir("cdclog8"), "wal.jsonl").toString, numPartitions = 4)
+    val span = 3L << 30
+    val ranges = stream.planInputPartitions(CdcOffset(0), CdcOffset(span))
+      .map(_.asInstanceOf[CdcRangePartition]).sortBy(_.startExclusive)
+    assert(ranges.length == 4)
+    assert(ranges.head.startExclusive == 0L && ranges.last.endInclusive == span)
+    assert(ranges.sliding(2).forall {
+      case Array(a, b) => a.endInclusive == b.startExclusive
+      case _ => true
+    })
+  }
+
   test("batch read splits the LSN span into parallel range readers") {
     val log = Paths.get(tmpDir("cdclog7"), "wal.jsonl")
     Files.write(log, golden.mkString("\n").getBytes)
